@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
 
   /** Timed action: the noop sink materializes EVERY column of every row
@@ -58,12 +58,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // iteration aid: comma-separated query names to bench (default: all)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup on the smoke-scale data: pays JVM/codegen/broadcast-pool
     // startup once instead of inside the first timed query. Isolated

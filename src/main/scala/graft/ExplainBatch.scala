@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: dump `explain("formatted")` plans + two timed runs for MANY
-  * queries in one JVM/session (Explain.scala's loop, amortized — one sbt
-  * startup per optimization batch instead of one per query).
+/** Dev tool: dump `explain("formatted")` plans + two timed runs for one
+  * or many queries in one JVM/session (one sbt startup per optimization
+  * batch instead of one per query).
   *
   * Usage: runMain graft.ExplainBatch <q1,q2,...> <sfDir> <outDir> <suffix>
   * Writes <outDir>/<name>_<suffix>.txt per query and prints
@@ -17,12 +15,7 @@ object ExplainBatch {
     val outDir = if (args.length > 2) args(2) else "plans/r13"
     val suffix = if (args.length > 3) args(3) else "plan"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosAsLongConf, "true")
-      .config("spark.ui.enabled", "false")
+    val builder = Sessions.local(cpus)
     // A/B experiment aid: 'k=v;k2=v2' extra confs for this session only.
     // Empty segments (trailing ';') are skipped; a segment without '='
     // fails with a message naming it instead of an opaque MatchError.

@@ -289,9 +289,8 @@ object Tables {
     else df.repartition(n, xxhash64(struct(df.columns.map(col): _*)))
   }
 
-  /** Source-identity fingerprint of one testdata table — the shared memo
-    * key for every driver-held trained-state cache (BPE merges, unigram
-    * LM, quality-classifier weights, dedup components, the Lloyd bank):
+  /** Source-identity fingerprint of one testdata table — what
+    * [[TrainedState]] checks before reusing driver-held trained state:
     * the harness regenerates testdata in place between rounds, so a cache
     * keyed on the directory alone would serve stale state. Key =
     * name:length:mtime per data file PLUS a 64-byte mid-file content

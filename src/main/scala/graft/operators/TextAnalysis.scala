@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Tables, TrainedState}
 
 /** Text-analysis operators for a training-data pipeline over `documents`.
   *
@@ -2030,38 +2030,20 @@ object TextAnalysis {
     * parquet scan through ≤ [[BpeRounds]]·[[BpeBatch]] chained narrow
     * string rewrites. Driver-held loop => both consumers are registered
     * in SparkEntry.actionfulQueries. */
-  /** Memoized trained-tokenizer artifacts: a BPE vocabulary trains ONCE
-    * per corpus and is then consumed by many readouts (bpe_merges,
-    * bpe_encode, tokenizer_parity — and a real pipeline's every encode
-    * job), so retraining per consumer is pure waste (measured 3×~3 s per
-    * bench pass). Keyed on (session, dir, corpus fingerprint): plans are
-    * session-bound, and the fingerprint (every documents.parquet file's
-    * name/length/mtime) invalidates the entry when the harness
-    * regenerates testdata in place — the Tables.eventsTsNanos probe
-    * discipline. The cached corpus frame is a PURE PLAN (its per-round
-    * caches are released before memoization), so holding it costs no
-    * executor memory. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame)]
-
-  private def docsFingerprint(dir: String): String =
-    Tables.sourceFingerprint(dir, "documents")
-
   private[graft] def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) =
-    bpeCache.computeIfAbsent((s, dir, docsFingerprint(dir)),
-      _ => bpeTrainUncached(s, dir))
+    TrainedState("bpe", s, dir, "documents")(bpeTrainUncached(s, dir))
 
   private def bpeTrainUncached(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], org.apache.spark.sql.DataFrame) = {
-    // fanOutNarrow (r14): every BPE round's pair explode AND the final
-    // encode replay the replace chain above this frame; on the
-    // single-file scan it all ran as one task (bpe_encode 1.08 s quiet
-    // baseline). Row-local replaces are order-insensitive. No-op on
+    val raw = Tables.documents(s, dir)
+      .select(col("doc_id"), concat(lit(" "), col("text"), lit(" ")).as("s"))
+    // fanOutNarrow (r14): every round's pair explode replays the replace
+    // chain above this frame; on the single-file scan it all ran as one
+    // task. Training-only: the returned encode frame replays the merges
+    // over `raw`, so it keeps no exchange below its output sort. No-op on
     // parallel layouts.
-    var corpus = Tables.fanOutNarrow(Tables.documents(s, dir)
-      .select(col("doc_id"), concat(lit(" "), col("text"), lit(" ")).as("s")))
+    var corpus = Tables.fanOutNarrow(raw)
     val cachedRounds =
       scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     val merges =
@@ -2096,14 +2078,19 @@ object TextAnalysis {
         }
         // disjoint symbols => the replaces commute; fold in rank order
         // for plan determinism (the result is order-free)
-        corpus = adopted.foldLeft(cur) { case (df, (l, r, _)) =>
-          val pat = lit(s" $l $r ")
-          val rep = lit(s" $l\u0001$r ")
-          df.withColumn("s", replace(replace(col("s"), pat, rep), pat, rep))
-        }
+        corpus = adopted.foldLeft(cur) { case (df, (l, r, _)) => bpeMerge(df, l, r) }
       }
     } finally cachedRounds.foreach(_.unpersist(blocking = false))
-    (merges.toSeq, corpus)
+    // merge_rank order applies each round's batch after the previous
+    // round's, exactly as the training chain did
+    (merges.toSeq, merges.foldLeft(raw) { case (df, (_, l, r, _)) => bpeMerge(df, l, r) })
+  }
+
+  private def bpeMerge(df: org.apache.spark.sql.DataFrame, l: String, r: String)
+      : org.apache.spark.sql.DataFrame = {
+    val pat = lit(s" $l $r ")
+    val rep = lit(s" $l\u0001$r ")
+    df.withColumn("s", replace(replace(col("s"), pat, rep), pat, rep))
   }
 
   /** The WITH-chain both BPE oracles share, mirroring [[bpeTrain]] round
@@ -2245,22 +2232,9 @@ object TextAnalysis {
     * with the exact batch-trained model. Runs [[QcEpochs]] driver-held
     * epochs over a cached feature frame (released before returning);
     * every collect is ≤ [[QcBuckets]] rows. */
-  /** Memoized [[trainQualityPerceptronUncached]]: the trained weight
-    * vector is a ≤[[QcBuckets]]-entry map consumed by every scorer
-    * (quality_classifier, rrf_fusion, the streaming curation ingest) and
-    * every bench repetition — retraining per consumer re-runs
-    * [[QcEpochs]] margin jobs for an identical result. Keyed on the
-    * corpus fingerprint, the bpeTrain/bigramLogprob discipline. */
   private[graft] def trainQualityPerceptron(s: org.apache.spark.sql.SparkSession,
       dir: String): Map[Long, Long] =
-    qcCache.compute((s, dir), (_, prev) => {
-      val fp = docsFingerprint(dir)
-      if (prev != null && prev._1 == fp) prev
-      else (fp, trainQualityPerceptronUncached(s, dir))
-    })._2
-
-  private val qcCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, Map[Long, Long])]
+    TrainedState("qc", s, dir, "documents")(trainQualityPerceptronUncached(s, dir))
 
   private def trainQualityPerceptronUncached(s: org.apache.spark.sql.SparkSession,
       dir: String): Map[Long, Long] = {
@@ -2403,47 +2377,25 @@ object TextAnalysis {
     * key — monotone integer bucketing over the negated lp4). */
   private val PplBuckets = 32
 
-  /** Memoized [[bigramLogprobUncached]]: the bigram-LM chain (corpus
-    * bigram counts + per-doc exact-decimal score) derives ONCE per
-    * (session, dir, corpus fingerprint) and is block-manager-persisted,
+  /** [[bigramLogprobUncached]], block-manager-persisted once per corpus,
     * so every consumer after the first — bigram_logprob,
     * perplexity_buckets, and each bench repetition — reads ~n_docs tiny
     * rows instead of re-running the two-shuffle derivation (judge-measured
-    * 2.71 s standalone vs 1.71 s warm before memoization). Same discipline
-    * as [[bpeTrain]]: plans are session-bound, and the fingerprint (every
-    * documents.parquet file's name/length/mtime) invalidates — and
-    * unpersists — the entry when the corpus is regenerated in place. The
-    * persisted frame is 3 narrow columns × n_docs: negligible executor
-    * memory at any tested scale, and at 100 TB this is exactly the
-    * score table a real pipeline materializes once and reuses. persist()
-    * is lazy, so builders stay action-free (OperatorSpec's contract). */
+    * 2.71 s standalone vs 1.71 s warm before memoization). The persisted
+    * frame is 3 narrow columns × n_docs: negligible executor memory at
+    * any tested scale, and at 100 TB this is exactly the score table a
+    * real pipeline materializes once and reuses. persist() is lazy, so
+    * builders stay action-free (OperatorSpec's contract). */
   private[graft] def bigramLogprob(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    blpCache.compute((s, dir), (_, prev) => {
-      val fp = docsFingerprint(dir)
-      if (prev != null && prev._1 == fp) prev
-      else {
-        if (prev != null) prev._2.unpersist(blocking = false)
-        (fp, bigramLogprobUncached(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    })._2
+    TrainedState("blp", s, dir, "documents")(bigramLogprobUncached(s, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private val blpCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (String, org.apache.spark.sql.DataFrame)]
-
-  /** Memoized, MATERIALIZED rrf_fusion rank frames — (doc_id, r_bm25) /
+  /** MATERIALIZED rrf_fusion rank frames — (doc_id, r_bm25) /
     * (doc_id, r_quality) / (doc_id, r_fluency), one 16-byte row per ranked
-    * doc. Previously each invocation (every bench repetition, every serving
-    * hit) re-ran the three corpus scorers AND their two-phase ranks, and
-    * persisted three fresh leg frames it never unpersisted — block-manager
-    * entries accumulated until the ContextCleaner happened to GC them.
-    * Now the whole derivation runs once per corpus: same key + invalidation
-    * discipline as [[bigramLogprob]] ((session, dir) key, corpus-fingerprint
-    * check, stale frames unpersisted), with the intermediate scorer legs
-    * force-materialized through the ranks and released before returning, so
-    * the steady-state cache is exactly the three rank tables a
+    * doc, derived once per corpus. The intermediate scorer legs are
+    * force-materialized through the ranks and released before returning,
+    * so the steady-state memo is exactly the three rank tables a
     * hybrid-retrieval pipeline materializes per corpus snapshot. rrf_fusion
     * is actionful (training loops) — the count() here adds no new class of
     * deviation.
@@ -2459,47 +2411,34 @@ object TextAnalysis {
     */
   private[graft] def rrfRanks(s: org.apache.spark.sql.SparkSession, dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = rrfCache.compute((s, dir), (_, prev) => {
-      val fp = docsFingerprint(dir)
-      if (prev != null && prev._1 == fp) prev
-      else {
-        if (prev != null)
-          Seq(prev._2, prev._3, prev._4).foreach(_.unpersist(blocking = false))
-        // each leg is REFERENCED three times by its two-phase rank (bounds,
-        // bucket counts, ranked rows) — persist the narrow (doc_id, neg)
-        // projection so the scoring subtree evaluates once, then release it
-        // once the rank frame is materialized.
-        // The rank key must be integral (twoPhaseRank's range bucketing);
-        // the BM25 score is an exact-DECIMAL(…,6) sum cast to double, so
-        // ×10⁶ is a lossless integerization with the identical order.
-        def rankOf(df: org.apache.spark.sql.DataFrame, out: String) = {
-          val leg = df.select("doc_id", "neg").persist(lvl)
-          val r = PipelineOps.twoPhaseRank(leg, Seq.empty, "neg", Seq("doc_id"), out)
-            .select("doc_id", out).persist(lvl)
-          r.count()
-          leg.unpersist(blocking = false)
-          r
-        }
-        val rb = rankOf(bm25Scored(s, dir).filter(col("score") > 0)
-          .withColumn("neg", expr("-CAST(round(score * 1000000) AS BIGINT)")),
-          "r_bm25")
-        val rq = rankOf(qcMargins(s, dir)
-          .withColumn("neg", -col("margin")), "r_quality")
-        val rf = rankOf(bigramLogprob(s, dir)
-          .withColumn("lp4", expr("CAST(round(avg_logprob * 10000) AS BIGINT)"))
-          .withColumn("neg", -col("lp4")), "r_fluency")
-        (fp, rb, rq, rf)
+        org.apache.spark.sql.DataFrame) =
+    TrainedState("rrf", s, dir, "documents") {
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      // each leg is REFERENCED three times by its two-phase rank (bounds,
+      // bucket counts, ranked rows) — persist the narrow (doc_id, neg)
+      // projection so the scoring subtree evaluates once, then release it
+      // once the rank frame is materialized.
+      // The rank key must be integral (twoPhaseRank's range bucketing);
+      // the BM25 score is an exact-DECIMAL(…,6) sum cast to double, so
+      // ×10⁶ is a lossless integerization with the identical order.
+      def rankOf(df: org.apache.spark.sql.DataFrame, out: String) = {
+        val leg = df.select("doc_id", "neg").persist(lvl)
+        val r = PipelineOps.twoPhaseRank(leg, Seq.empty, "neg", Seq("doc_id"), out)
+          .select("doc_id", out).persist(lvl)
+        r.count()
+        leg.unpersist(blocking = false)
+        r
       }
-    })
-    (e._2, e._3, e._4)
-  }
-
-  private val rrfCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]
+      val rb = rankOf(bm25Scored(s, dir).filter(col("score") > 0)
+        .withColumn("neg", expr("-CAST(round(score * 1000000) AS BIGINT)")),
+        "r_bm25")
+      val rq = rankOf(qcMargins(s, dir)
+        .withColumn("neg", -col("margin")), "r_quality")
+      val rf = rankOf(bigramLogprob(s, dir)
+        .withColumn("lp4", expr("CAST(round(avg_logprob * 10000) AS BIGINT)"))
+        .withColumn("neg", -col("lp4")), "r_fluency")
+      (rb, rq, rf)
+    }
 
   /** `(doc_id, n_bigrams, avg_logprob)` — each doc scored by the mean
     * log-probability of its bigrams under the in-corpus bigram LM.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Tables, TrainedState}
 
 /** Unigram-LM (SentencePiece-style) subword tokenizer — the second
   * tokenizer family next to TextAnalysis' BPE, per the round-7 roadmap.
@@ -194,24 +194,12 @@ object UnigramLm {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
-  /** Memoized trained tokenizer: (vocab table rows, final scores).
+  /** Trained tokenizer: (vocab table rows, final scores), once per corpus.
     * Vocab rows are (rank, piece, n_uses, score) ranked by
-    * (count desc, piece UTF-8 asc). Keyed on the corpus fingerprint —
-    * the bpeTrain/bigramLogprob discipline. */
-  private val uniCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (String, (Seq[(Int, String, Long, Long)], Map[String, Long]))]
-
-  private def docsFingerprint(dir: String): String =
-    Tables.sourceFingerprint(dir, "documents")
-
+    * (count desc, piece UTF-8 asc). */
   private[graft] def train(s: SparkSession, dir: String)
       : (Seq[(Int, String, Long, Long)], Map[String, Long]) =
-    uniCache.compute((s, dir), (_, prev) => {
-      val fp = docsFingerprint(dir)
-      if (prev != null && prev._1 == fp) prev
-      else (fp, trainUncached(s, dir))
-    })._2
+    TrainedState("unigram", s, dir, "documents")(trainUncached(s, dir))
 
   private def trainUncached(s: SparkSession, dir: String)
       : (Seq[(Int, String, Long, Long)], Map[String, Long]) = {
