@@ -32,7 +32,9 @@ object SparkEntry {
   /** Queries whose builder RUNS Spark jobs (connected-components needs
     * per-round convergence checks) — the documented deviations from the
     * GraftQuery pure-plan contract. Tests asserting action-free plan
-    * construction exclude exactly this set. */
+    * construction exclude exactly this set. A builder whose per-corpus
+    * work goes through [[TrainedState]] runs its jobs only on the first
+    * build per session and corpus. */
   val actionfulQueries: Set[String] =
     Set("dedup_clusters", "dedup_keep_list", "dedup_keep_best",
       "minhash_clusters", "entity_clusters", "dup_pagerank", "dup_triangles", "dup_reach",
@@ -43,8 +45,9 @@ object SparkEntry {
       "bpe_merges", "bpe_encode",
       "tokenizer_parity", "kcenter_sample", "bitext_margin", "split_repair",
       "unigram_train", "unigram_encode", "tokenizer_compare", "rrf_fusion",
-      // video_neardup decodes clips ONCE into an eager localCheckpoint
-      // (three plan references would re-decode the corpus three times)
+      // video_neardup decodes clips into an eager localCheckpoint (three
+      // plan references would re-decode the corpus three times), once per
+      // documents corpus through TrainedState
       "video_neardup",
       // web_pipeline collects the bounded eval gram set (≤ EvalMaxDocId
       // docs) and ships it as a sparkContext.broadcast (round 12's leak

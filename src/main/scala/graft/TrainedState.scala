@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** The one memo for driver-trained per-corpus state (BPE merges, unigram
-  * LM, quality-perceptron weights, bigram-LM scores, dedup components,
-  * the Lloyd bank, RRF ranks): state trains once per corpus and is then
-  * reused by every consumer and every repetition.
+/** The one memo for driver-derived per-corpus state: trained state (BPE
+  * merges, unigram LM, quality-perceptron weights, bigram-LM scores,
+  * dedup components, the Lloyd bank, RRF ranks) and the eager frames of
+  * the actionful similarity/video builders (bitext_margin's scored pairs
+  * and neighborhoods, kcenter_sample's picks, semdedup's ranked cells,
+  * video_neardup's clip codes). Such state is derived once per corpus and
+  * then reused by every consumer and every repetition.
   *
   * Rule: ONE entry per (name, dir). A lookup hits only when the entry was
   * trained in the same session (by reference — plans are session-bound)
@@ -17,18 +20,24 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * The lock is the object monitor, which is reentrant: a trainer may look
   * up other trained state (rrfRanks trains inside its own entry and calls
-  * bigramLogprob and trainQualityPerceptron). */
+  * bigramLogprob and trainQualityPerceptron; semdedupRanked calls
+  * trainLloydBank). */
 object TrainedState {
   private final case class Entry(session: SparkSession, fingerprint: String, value: Any)
 
   private val entries = scala.collection.mutable.HashMap.empty[(String, String), Entry]
+  private val counts = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
 
   def apply[T](name: String, s: SparkSession, dir: String, table: String)(train: => T): T = {
     val fp = Tables.sourceFingerprint(dir, table)
     synchronized {
+      val (hits, misses) = counts.getOrElse(name, (0L, 0L))
       entries.get((name, dir)) match {
-        case Some(e) if (e.session eq s) && e.fingerprint == fp => e.value.asInstanceOf[T]
+        case Some(e) if (e.session eq s) && e.fingerprint == fp =>
+          counts(name) = (hits + 1, misses)
+          e.value.asInstanceOf[T]
         case stale =>
+          counts(name) = (hits, misses + 1)
           // release BEFORE training: a frame retrained over the same path
           // has the same plan, so persisting it while the stale one is
           // still cached would serve the stale cached rows
@@ -45,6 +54,9 @@ object TrainedState {
     case p: Product if !p.isInstanceOf[Iterable[_]] => p.productIterator.foreach(release)
     case _ => ()
   }
+
+  /** `(hits, misses)` of every lookup under `name` so far, over all dirs. */
+  def stats(name: String): (Long, Long) = synchronized(counts.getOrElse(name, (0L, 0L)))
 
   /** The session the (name, dir) entry was trained in, if any. */
   private[graft] def sessionOf(name: String, dir: String): Option[SparkSession] =

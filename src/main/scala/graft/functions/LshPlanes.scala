@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Deterministic random-hyperplane bank for sign-LSH over 64-dim vectors.
   *

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.{GraftQuery, Tables}
 

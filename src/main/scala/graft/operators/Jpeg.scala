@@ -132,7 +132,7 @@ object Jpeg {
     def bit(): Int = {
       if (cnt == 0) {
         require(pos < data.length, "entropy stream truncated")
-        var b = data(pos) & 0xff
+        val b = data(pos) & 0xff
         pos += 1
         if (b == 0xff) {
           require(pos < data.length, "entropy stream truncated at 0xFF")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Tables, TrainedState}
 
 /** Multimodal-column plumbing: opaque binary payloads + typed metadata.
   *
@@ -1075,12 +1075,14 @@ object Multimodal {
   // #1): per-FRAME luma fingerprints over the real Y4M decode, positional
   // banded-Hamming candidates through the shared capped machinery
   // (Dedup.hammingCandidatesSeg), then a frame-majority vote per clip
-  // pair. Scale shape: clips decode ONCE into per-clip fingerprint arrays
-  // (eager localCheckpoint, the bitext_margin discipline — three plan
-  // references to the frames would otherwise re-decode the corpus three
-  // times); band rows carry only (clip, frame, 8-byte code); candidate
-  // volume is provably linear (CandidateBoundSpec); the vote is pure
-  // per-row array arithmetic on the two clips' code arrays.
+  // pair. Scale shape: clips decode ONCE per documents corpus into
+  // per-clip fingerprint arrays (an eager localCheckpoint held by
+  // TrainedState, the bitext_margin discipline — three plan references
+  // to the frames would otherwise re-decode the corpus three times, and
+  // every repeat call would decode it again); band rows carry only
+  // (clip, frame, 8-byte code); candidate volume is provably linear
+  // (CandidateBoundSpec); the vote is pure per-row array arithmetic on
+  // the two clips' code arrays.
 
   /** video_neardup per-frame match threshold (bits of the 63-bit code). */
   val VideoFrameMaxHamming = 5
@@ -1136,10 +1138,12 @@ object Multimodal {
     * the longer clip count AGAINST the pair) → majority vote. */
   private[graft] def videoNeardup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val clips = asMedia(s, dir)
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .mapPartitions(videoClipRows).toDF("doc_id", "fps")
-      .localCheckpoint(true)
+    val clips = TrainedState("video", s, dir, "documents") {
+      asMedia(s, dir)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        .mapPartitions(videoClipRows).toDF("doc_id", "fps")
+        .localCheckpoint(true)
+    }
     val cand = videoCandidates(clips)
     cand
       .join(clips.select(col("doc_id").as("doc_a"), col("fps").as("fps_a")), "doc_a")

@@ -645,7 +645,7 @@ object StreamingPipeline {
       maxDelay: String = "10 minutes",
       watermarkDelay: String = "1 minute",
       joinType: String = "inner"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     require(leftTs != rightTs,
       "left and right event-time columns must have distinct names")
     val l = left.withWatermark(leftTs, watermarkDelay)

@@ -11,30 +11,15 @@ class OperatorSpec extends SparkSuite {
   test("plan construction is action-free (no Spark jobs) for every registered query") {
     // dedup_clusters is the one documented deviation: label propagation
     // must run per-round convergence checks (see its registration note)
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, jobs) = withJobCount {
       SparkEntry.all
         .filterNot(q => SparkEntry.actionfulQueries(q.name))
         // force full physical planning, not just logical construction —
         // catches planning-time failures for every registered query, and
         // proves planning itself schedules nothing (AQE stays lazy)
         .foreach(q => q.plan(spark, sf).queryExecution.executedPlan)
-      // sentinel job: once its JobStart is delivered, any job started by the
-      // plan builders above would have been delivered too (bus is ordered).
-      // Raw RDD action — an SQL count() under AQE submits one job per query
-      // stage and would double-count.
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (jobs.get() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(200) // drain anything queued behind the sentinel
-      assert(jobs.get() == 1,
-        s"expected only the sentinel job, saw ${jobs.get()} — a plan builder ran an action")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs == 0, s"a plan builder ran an action: $jobs job(s) started")
   }
 
   test("similarity top-k plans use TopKPerKeyExec, not a full per-query sort") {
