@@ -1,8 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, TimeMode}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 
+import graft.functions.{VectorExpressions => V}
 import graft.operators.{Ingest, WindowAgg}
 
 /** The reference's streaming topology, Spark-native.
@@ -79,14 +83,15 @@ object StreamingPipeline {
     aggs.writeStream
       .outputMode(if (mimicReference) OutputMode.Update() else OutputMode.Append())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        // Empty-batch guard as in the reference (processor.py:127-131);
-        // unlike the reference we do NOT swallow sink exceptions — a failed
-        // batch must fail the query so the checkpoint retries it.
-        guardedSink(df, batchId, sink)
-      }
+      .foreachBatch(guardedSink(sink) _)
 
-  /** Raw-rows sink (A12): append mode, same foreachBatch shape. */
+  /** Raw-rows sink (A12): append mode, each batch straight to `sink`.
+    * NOTE: a stateless query runs a batch only when new offsets exist, and
+    * the decode maps rows 1:1, so no empty-batch guard is needed. The one
+    * exception: a Kafka offset range holding only transaction markers
+    * reaches the sink as an empty frame, which
+    * [[graft.operators.Sinks.appendParquet]] lands as one empty file and
+    * JDBC as nothing. */
   def rawWriter(
       decoded: DataFrame,
       checkpoint: String,
@@ -94,16 +99,21 @@ object StreamingPipeline {
     decoded.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        guardedSink(df, batchId, sink)
-      }
+      .foreachBatch(sink)
 
-  /** Empty-batch guard without recomputation: `isEmpty` is an ACTION, so
-    * an uncached guard would re-execute the full batch plan (including
-    * stateful aggregation) a second time when the sink runs. Persist for
-    * the guard + sink, release after. */
-  private def guardedSink(df: DataFrame, batchId: Long,
-      sink: (DataFrame, Long) => Unit): Unit = {
+  /** Empty-batch guard for [[aggregateWriter]] (A13, as in
+    * processor.py:127-131). Append mode runs no-data batches to close
+    * windows, most of which emit nothing, and an empty append still writes
+    * one empty parquet file. `isEmpty` is an action: the batch is persisted
+    * so the stateful plan runs once for guard + sink. Unlike the reference,
+    * sink errors are not swallowed: a failed batch fails the query so the
+    * checkpoint retries it.
+    * NOTE: `count() > 0` starts the same jobs as `isEmpty` (1 per empty
+    * batch, 2 per non-empty one) and is no faster. Async progress tracking
+    * cannot drop the commit cost here: it rejects stateful queries, and for
+    * the raw query it would need the internal `…OverrideSinkSupportCheck`
+    * conf. */
+  private def guardedSink(sink: (DataFrame, Long) => Unit)(df: DataFrame, batchId: Long): Unit = {
     df.persist()
     try { if (!df.isEmpty) sink(df, batchId) }
     finally df.unpersist(blocking = false)
@@ -160,7 +170,6 @@ object StreamingPipeline {
     * rows collapse, which IS dedup semantics. Shared by every streaming
     * dedup keying scheme so the replay discipline cannot drift. */
   private def nullTextFallbackKey(docs: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, concat, lit, struct, to_json, xxhash64}
     concat(lit("null:"),
       xxhash64(to_json(struct(docs.columns.map(col): _*),
         Map("ignoreNullFields" -> "false"))).cast("string"))
@@ -171,8 +180,6 @@ object StreamingPipeline {
       textCol: String = "text",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat, lit, size, when}
-    import graft.functions.{VectorExpressions => V}
     docs
       // a null event time must not reach the stateful operator (the
       // silentDevices lesson: the watermark drops OLD rows, not null
@@ -215,7 +222,6 @@ object StreamingPipeline {
       payloadCol: String = "payload",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val session = images.sparkSession
     import session.implicits._
     images
@@ -251,7 +257,6 @@ object StreamingPipeline {
       urlCol: String = "url",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, concat, lit}
     urls
       .filter(col(tsCol).isNotNull)
       .withColumn("_curl",
@@ -288,7 +293,6 @@ object StreamingPipeline {
       textCol: String = "text",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, md5, to_binary, when}
     docs
       .filter(col(tsCol).isNotNull)
       .withColumn("_digest",
@@ -315,8 +319,6 @@ object StreamingPipeline {
       tsCol: String = "timestamp",
       silenceMs: Long = 30 * 60 * 1000L,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val spark = readings.sparkSession
     import spark.implicits._
     readings
@@ -367,7 +369,6 @@ object StreamingPipeline {
     * monitoring hook a production pipeline alerts on. */
   def withQualityMetrics(decoded: DataFrame, tsCol: String = "timestamp",
       valueCol: String = "value"): DataFrame = {
-    import org.apache.spark.sql.functions.{count, lit, sum, when, col}
     decoded.observe("graft_quality",
       count(lit(1)).as("rows"),
       sum(when(col(tsCol).isNull, 1).otherwise(0)).as("null_ts"),
@@ -404,7 +405,6 @@ object StreamingPipeline {
       keyCol: String = "device_type",
       valueCol: String = "value",
       z: Double = graft.operators.Stats.RobustZThreshold): DataFrame = {
-    import org.apache.spark.sql.functions.{abs, broadcast, col, round}
     val c = graft.operators.Stats.MadConsistency
     readings
       .join(broadcast(stats), Seq(keyCol), "left")
@@ -421,7 +421,6 @@ object StreamingPipeline {
     * not drop. */
   private def binCol(v: org.apache.spark.sql.Column, lo: Double, hi: Double,
       bins: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{floor, greatest, least, lit}
     if (hi > lo)
       least(lit((bins - 1).toLong), greatest(lit(0L),
         floor((v - lo) * bins / (hi - lo))))
@@ -433,7 +432,6 @@ object StreamingPipeline {
     * are fine — the monitor Laplace-smooths over the full universe. */
   def driftBaseline(ref: DataFrame, valueCol: String, lo: Double, hi: Double,
       bins: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit}
     ref.filter(col(valueCol).isNotNull)
       .withColumn("bin", binCol(col(valueCol), lo, hi, bins))
       .groupBy("bin").agg(count(lit(1)).as("ref_cnt"))
@@ -466,8 +464,6 @@ object StreamingPipeline {
       valueCol: String = "value",
       windowLen: String = "1 minute",
       watermarkDelay: String = "1 minute"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val counts = readings
       .filter(col(valueCol).isNotNull)
       .withWatermark(tsCol, watermarkDelay)
@@ -527,8 +523,6 @@ object StreamingPipeline {
       tsCol: String = "timestamp",
       windowLen: String = "1 minute",
       watermarkDelay: String = "1 minute"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val (_, rules) = graft.operators.TextAnalysis.gopherRules(col(textCol))
     val flags = docs
       .filter(col(tsCol).isNotNull)
@@ -575,7 +569,6 @@ object StreamingPipeline {
       windowLen: String = "1 minute",
       watermarkDelay: String = "1 minute",
       k: Int = 8): DataFrame = {
-    import org.apache.spark.sql.functions._
     events
       .filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
       .withWatermark(tsCol, watermarkDelay)
@@ -604,8 +597,6 @@ object StreamingPipeline {
       weights: Map[Long, Long],
       textCol: String = "text",
       buckets: Int = graft.operators.TextAnalysis.QcBuckets): DataFrame = {
-    import org.apache.spark.sql.functions.{aggregate, coalesce, col, element_at, lit, typedlit}
-    import org.apache.spark.sql.types.{DecimalType, LongType}
     val wmap = typedlit(weights)
     val dec = DecimalType(38, 0)
     graft.operators.TextAnalysis.withBigramBuckets(docs, textCol, buckets, "__qc_f")
@@ -645,7 +636,6 @@ object StreamingPipeline {
       maxDelay: String = "10 minutes",
       watermarkDelay: String = "1 minute",
       joinType: String = "inner"): DataFrame = {
-    import org.apache.spark.sql.functions.expr
     require(leftTs != rightTs,
       "left and right event-time columns must have distinct names")
     val l = left.withWatermark(leftTs, watermarkDelay)
@@ -680,7 +670,6 @@ object StreamingPipeline {
       textCol: String = "text",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     scoreQuality(
       dedupByMinHashWithinWatermark(
         docs.filter(graft.operators.TextAnalysis.qualityGate(col(textCol))),
@@ -718,7 +707,6 @@ object StreamingPipeline {
       htmlCol: String = "html",
       tsCol: String = "timestamp",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val session = pages.sparkSession
     import session.implicits._
     dedupUrlsByCanonicalWithinWatermark(pages, idCol, urlCol, tsCol, watermarkDelay)
@@ -762,7 +750,6 @@ object StreamingPipeline {
       idCol: String = "doc_id",
       payloadCol: String = "payload",
       tsCol: String = "timestamp"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val session = docs.sparkSession
     import session.implicits._
     docs
@@ -820,7 +807,6 @@ object StreamingPipeline {
       idCol: String = "chat_id",
       jsonCol: String = "json",
       tsCol: String = "timestamp"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val session = chats.sparkSession
     import session.implicits._
     chats
@@ -849,7 +835,6 @@ object StreamingPipeline {
       idCol: String = "pair_id",
       jsonCol: String = "json",
       tsCol: String = "timestamp"): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val session = pairs.sparkSession
     import session.implicits._
     pairs
@@ -883,8 +868,6 @@ object StreamingPipeline {
       idCol: String = "vec_id",
       embCol: String = "embedding",
       tsCol: String = "timestamp"): DataFrame = {
-    import org.apache.spark.sql.functions.{col, size, round}
-    import graft.functions.{VectorExpressions => V}
     import graft.operators.Similarity.{EmbDims, MaxVecNorm}
     vecs
       .select(col(idCol).cast("long"), col(embCol), col(tsCol))
@@ -919,7 +902,6 @@ object StreamingPipeline {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{coalesce, lit, not}
         // a NULL predicate row would vanish from BOTH filters (filter
         // drops null); coalesce makes the split an exact partition with
         // null-verdict rows quarantined
@@ -959,8 +941,6 @@ object StreamingPipeline {
       lo: Double = 0.0,
       hi: Double = 100.0,
       threshold: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.streaming.TimeMode
     require(threshold >= 1, s"threshold must be >= 1, got $threshold")
     val spark = readings.sparkSession
     import spark.implicits._
@@ -990,7 +970,7 @@ private[streaming] final class StreakProcessor(
       (String, java.sql.Timestamp, Double),
       (String, java.sql.Timestamp, java.sql.Timestamp, Int)] {
 
-  import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, TTLConfig, ValueState}
+  import org.apache.spark.sql.streaming.{OutputMode => OM, TimerValues, TTLConfig, ValueState}
 
   @transient private var streak: ValueState[(Int, Long)] = _
 

@@ -8,16 +8,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per JVM — ScalaTest suites in
-  * the same forked JVM reuse it via getOrCreate). */
+  * the same forked JVM reuse it via getOrCreate): the harness mains'
+  * [[Sessions.local]] on 4 cores. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config(Tables.NanosAsLongConf, "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("4").appName("graft-test").getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
 

@@ -776,6 +776,61 @@ class StreamingSpec extends SparkSuite {
     } finally { aggQ.stop(); rawQ.stop() }
   }
 
+  test("rawWriter hands a micro-batch straight to its sink: no guard job") {
+    implicit val sc = spark.sqlContext
+    def ckpt() = java.nio.file.Files.createTempDirectory("graft-guard-ckpt").toString
+    // a sink that runs no action: every job counted below is the writer's own
+    var rawCalls = 0
+    val rawIn = MemoryStream[Reading]
+    val rawQ = StreamingPipeline.rawWriter(rawIn.toDF(), ckpt(), (_, _) => rawCalls += 1).start()
+    val aggIn = MemoryStream[Reading]
+    val aggQ = StreamingPipeline.aggregateWriter(
+      StreamingPipeline.aggregates(aggIn.toDF()), ckpt(), (_, _) => ()).start()
+    try {
+      val (_, rawJobs) = withJobCount {
+        rawIn.addData(reading("2024-01-01T10:00:10Z", 10.0))
+        rawQ.processAllAvailable()
+      }
+      assert(rawCalls == 1)
+      assert(rawJobs == 0, s"one raw micro-batch started $rawJobs Spark jobs")
+      // the counter does see the stream thread's jobs: the aggregate
+      // writer's empty-batch guard is one
+      val (_, aggJobs) = withJobCount {
+        aggIn.addData(reading("2024-01-01T10:00:10Z", 10.0))
+        aggQ.processAllAvailable()
+      }
+      assert(aggJobs >= 1, s"the guarded aggregate batch started $aggJobs Spark jobs")
+    } finally { rawQ.stop(); aggQ.stop() }
+  }
+
+  test("aggregateWriter never hands its sink an empty frame while the watermark moves inside a window") {
+    implicit val sc = spark.sqlContext
+    val mem = MemoryStream[Reading]
+    var emitted = Seq.empty[Long]
+    val q = StreamingPipeline.aggregateWriter(
+      StreamingPipeline.aggregates(mem.toDF()),
+      java.nio.file.Files.createTempDirectory("graft-guard-ckpt").toString,
+      (df, _) => emitted :+= df.count()).start()
+    try {
+      // each batch moves the watermark (max event time - 1 min) but not
+      // past 10:01, so the 10:00 window stays open; Spark follows each
+      // watermark move with a no-data batch that emits nothing
+      for (t <- Seq("10:00:10", "10:00:40", "10:00:55")) {
+        mem.addData(reading(s"2024-01-01T${t}Z", 10.0))
+        q.processAllAvailable()
+      }
+      // an idle progress event also reports 0 rows; a batch that ran has addBatch
+      val noDataBatches = q.recentProgress.count(p =>
+        p.numInputRows == 0 && p.durationMs.containsKey("addBatch"))
+      assert(noDataBatches > 0, "no no-data batch ran, so the guard was never exercised")
+      assert(emitted.isEmpty, s"the sink was called with ${emitted.mkString(",")} rows")
+      // 10:03 moves the watermark to 10:02: the 10:00 window closes, once
+      mem.addData(reading("2024-01-01T10:03:00Z", 99.0))
+      q.processAllAvailable()
+      assert(emitted == Seq(1L), s"the sink was called with ${emitted.mkString(",")} rows")
+    } finally q.stop()
+  }
+
   test("ProgressMonitor collects per-batch rates, state sizes, and observed quality metrics") {
     implicit val sc = spark.sqlContext
     val mon = new graft.streaming.ProgressMonitor(spark, capacity = 8).attach()
@@ -790,21 +845,34 @@ class StreamingSpec extends SparkSuite {
       q.processAllAvailable()
       mem.addData(reading("2024-01-01T10:03:00Z", 99.0))
       q.processAllAvailable()
+      // the watermark is now 10:02: two rows for the 10:00 window are late
+      mem.addData(reading("2024-01-01T10:00:20Z", 1000.0),
+                  reading("2024-01-01T10:00:30Z", 1000.0))
+      q.processAllAvailable()
       // listener events are delivered asynchronously after the batch
       val deadline = System.currentTimeMillis() + 20000
-      while (mon.totalInputRows("mon_agg") < 3 && System.currentTimeMillis() < deadline)
+      while (mon.totalInputRows("mon_agg") < 5 && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-      assert(mon.totalInputRows("mon_agg") == 3,
+      assert(mon.totalInputRows("mon_agg") == 5,
         s"monitor saw ${mon.totalInputRows("mon_agg")} input rows")
       val snaps = mon.snapshotsFor("mon_agg").filter(_.numInputRows > 0)
       assert(snaps.nonEmpty)
       // windowed-agg state rides the snapshots
       assert(snaps.exists(_.stateRowsTotal > 0), "no state rows observed")
-      // the observe()d quality counters surface per batch: rows + value sum
+      // the late rows are counted where the state operator drops them
+      val dropped = snaps.map(_.numRowsDroppedByWatermark).sum
+      assert(dropped > 0, "no late drops observed")
+      // the duration split: the sink write is timed, only the kept phases ride
+      assert(snaps.exists(_.durationMs.getOrElse("addBatch", 0L) > 0),
+        s"no positive addBatch in ${snaps.map(_.durationMs).mkString(";")}")
+      assert(snaps.forall(_.durationMs.keySet.subsetOf(
+        Set("addBatch", "walCommit", "commitOffsets", "triggerExecution"))))
+      // the observe()d quality counters surface per batch: rows + value
+      // sum, counted before the watermark drops the late rows
       val quality = snaps.flatMap(_.observed.get("graft_quality"))
       assert(quality.nonEmpty, "graft_quality observed metrics missing")
       val qRows = quality.map(_("rows").asInstanceOf[Long]).sum
-      assert(qRows == 3, s"quality counter saw $qRows rows")
+      assert(qRows == 5, s"quality counter saw $qRows rows")
     } finally { q.stop(); mon.detach() }
   }
 
